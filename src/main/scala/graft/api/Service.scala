@@ -36,10 +36,9 @@ class Service(store: ConversationStore, pipeline: ResearchPipeline) {
   /** GET /api/status/{workflow_id} (main.py:269-434). */
   def status(workflowId: String): Option[StatusResponse] =
     store.getConversation(workflowId).map { c =>
-      val msgs = store.getMessages(workflowId).collect()
+      val n = store.messageCategories(workflowId)
       StatusResponse(workflowId, c.status,
-        msgs.count(_.getAs[String]("message_category") == "clarification_question"),
-        msgs.count(_.getAs[String]("message_category") == "clarification_answer"))
+        n.getOrElse("clarification_question", 0), n.getOrElse("clarification_answer", 0))
     }
 
   /** POST /api/answer/{workflow_id} (main.py:437-498). */

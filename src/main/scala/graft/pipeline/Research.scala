@@ -139,9 +139,12 @@ class ResearchPipeline(spark: SparkSession, store: ConversationStore,
 
     val qVec = agents.embed(query)
 
-    // D1 — cache gate: best indexed result ≥ gateThreshold short-circuits
+    // D1 — cache gate: best indexed result ≥ gateThreshold short-circuits.
+    // Nothing writes results before the miss path's context retrieval, so
+    // this one probe answers both.
+    val anyIndexed = !indexedResults.isEmpty
     val hit =
-      if (indexedResults.isEmpty) None
+      if (!anyIndexed) None
       else Rag.bestMatch(indexedResults, "result_id", "embedding", qVec, gateThreshold)
     hit match {
       case Some(row) =>
@@ -161,7 +164,7 @@ class ResearchPipeline(spark: SparkSession, store: ConversationStore,
 
         // V5 — context retrieval (k=3, t=0.5)
         val context =
-          if (indexedResults.isEmpty) None
+          if (!anyIndexed) None
           else {
             val rows = Rag.contextRetrieval(indexedResults, "result_id", "embedding",
               coalesce(col("title"), lit("Untitled")), col("short_summary"),
@@ -192,14 +195,12 @@ class ResearchPipeline(spark: SparkSession, store: ConversationStore,
 
         val imagePath = Await.result(imageF, 60.seconds) // D3 join (imagegen timeout)
 
-        // D6 — lazy persistence: only if no Result rows exist yet (anti-join guard)
-        val already = store.getResults(workflowId).limit(1).collect().nonEmpty
-        val resultId = if (!already) {
-          val r = store.addResult(workflowId, report.short_summary,
-            report.markdown_report, now, extractTitle(report.markdown_report), imagePath)
-          store.setEmbedding(r.result_id, agents.embed(report.markdown_report)) // V1+S7
-          r.result_id
-        } else store.getResults(workflowId).collect().head.getAs[String]("result_id")
+        // D6 — lazy persistence: only if no Result rows exist yet (anti-join
+        // guard); the row is written already indexed (V1+S7 in one append)
+        if (!store.hasResults(workflowId))
+          store.addIndexedResult(workflowId, report.short_summary,
+            report.markdown_report, now, extractTitle(report.markdown_report), imagePath,
+            agents.embed(report.markdown_report))
 
         store.updateStatus(workflowId, "completed")
         emit("research_complete", workflowId, now)
@@ -215,12 +216,9 @@ class ResearchPipeline(spark: SparkSession, store: ConversationStore,
     if (questions.isEmpty) { run(workflowId, query, now); Seq.empty }
     else {
       store.createConversation(workflowId, query, "awaiting_clarifications", now)
-      store.addMessage(workflowId, "human", query, now, Some("initial_query"))
+      // J3-guarded: re-asking the same question must not duplicate it
+      store.addQueryWithQuestions(workflowId, query, questions, now)
       emit("clarifications_generated", workflowId, now, s"""{"n":${questions.size}}""")
-      questions.zipWithIndex.foreach { case (q, i) =>
-        // J3-guarded: re-asking the same question must not duplicate it
-        store.addMessageIfAbsent(workflowId, "ai", q, now, Some("clarification_question"))
-      }
       store.updateStatus(workflowId, "collecting_answers")
       questions
     }
@@ -238,9 +236,9 @@ class ResearchPipeline(spark: SparkSession, store: ConversationStore,
     else if (answer.trim.isEmpty) Left("answer must be non-empty")
     else {
       store.addMessage(workflowId, "human", answer.trim, now, Some("clarification_answer"))
-      val msgs = store.getMessages(workflowId).collect()
-      val nQ = msgs.count(_.getAs[String]("message_category") == "clarification_question")
-      val nA = msgs.count(_.getAs[String]("message_category") == "clarification_answer")
+      val n = store.messageCategories(workflowId)
+      val nQ = n.getOrElse("clarification_question", 0)
+      val nA = n.getOrElse("clarification_answer", 0)
       emit("clarification_answered", workflowId, now, s"""{"answered":$nA,"total":$nQ}""")
       if (nA >= nQ) {
         store.updateStatus(workflowId, "researching")

@@ -2,9 +2,13 @@ package graft.store
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
 
@@ -20,14 +24,31 @@ import graft.model.Schemas
  *
  * Storage: the north star is Iceberg MERGE/UPDATE, but /opt/spark/jars
  * carries no iceberg-runtime jar, so the API stays Iceberg-shaped
- * (merge/append/update verbs) over parquet read-modify-overwrite. At 100 TB
- * on Iceberg the same verbs become `MERGE INTO`/`UPDATE` row-level ops with
- * partition (bucket(workflow_id)) pruning; only this class changes, not
- * callers.
+ * (merge/append/update verbs) over parquet appends and whole-table
+ * rewrites. At 100 TB on Iceberg the same verbs become `MERGE INTO`/`UPDATE`
+ * row-level ops with partition (bucket(workflow_id)) pruning; only this
+ * class changes, not callers.
  *
- * Write-path scale notes: every mutation here rewrites only the target
- * table (point upserts on conversations are tiny; messages/results appends
- * go through append mode, no rewrite). Sequence assignment is the batch
+ * Spark jobs per verb (a job is a driver round-trip; on tiny tables it
+ * costs far more than the rows it touches). Every guard is one
+ * key-filtered scan, no verb re-reads a row it just wrote, and no verb
+ * rewrites a table whose rows would not change:
+ *  - `getConversation`: 1 (filtered scan).
+ *  - `createConversation`: 1 lookup, then 1 append when new, nothing when
+ *    the status is unchanged, and 1 rewrite when the status changes.
+ *  - `addMessage`, `addMessageIfAbsent`: 1 scan of messages ∪ results
+ *    (next sequence and duplicate guard together) + 1 append (none when
+ *    the guard finds a duplicate). `addQueryWithQuestions` is the same
+ *    scan and append for a whole batch of guarded questions.
+ *  - `addResult`, `addIndexedResult`: 1 scan + 1 append to results + 1 to
+ *    result_links. `linkExistingResult`: 1 scan + 1 append when new.
+ *  - `messageCategories`, `hasResults`: 1 (filtered scan, no sort).
+ *  - `updateStatus`, `setEmbedding`: 1 job, but it rewrites the WHOLE
+ *    table (conversations / results) into a staged directory that then
+ *    replaces the live one. These are the write amplification left; the
+ *    keyed upsert that removes them is ROADMAP open item #2 (snapshot
+ *    commit path).
+ * Appends write one small file each. Sequence assignment is the batch
  * row_number form for bulk loads and max+1 for single appends (the
  * reference's per-write semantics, neo4j_memory.py:327-339).
  */
@@ -36,49 +57,89 @@ class ConversationStore(spark: SparkSession, basePath: String) {
 
   private def path(t: String) = s"$basePath/$t"
 
-  private def readOr(t: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    try spark.read.schema(schema).parquet(path(t))
-    catch { case _: Throwable => spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema) }
+  private def fs(p: Path): FileSystem = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The table at `t`, or an empty local frame when its path does not
+    * exist yet. Any other failure (unreadable path, unknown filesystem)
+    * propagates: a store must never read as empty because it is broken. */
+  private def readOr(t: String, schema: StructType): DataFrame = {
+    if (recover(t)) spark.read.schema(schema).parquet(path(t))
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
+
+  /**
+   * Finishes a swap of [[overwrite]] that a dying process left between its
+   * two renames: the live table is missing while its new rows sit complete
+   * in `.staged` (the write committed, so `_SUCCESS` is there) or its old
+   * rows in `.retired`. Moves the newest complete copy back to live, so no
+   * read sees the table empty and no append or rewrite starts a new one
+   * beside it. True when the live table exists afterwards.
+   */
+  private def recover(t: String): Boolean = {
+    val live = new Path(path(t))
+    val f = fs(live)
+    f.exists(live) || {
+      val staged = new Path(s"${path(t)}.staged")
+      val retired = new Path(s"${path(t)}.retired")
+      val copy =
+        if (f.exists(new Path(staged, "_SUCCESS"))) Some(staged)
+        else Some(retired).filter(f.exists)
+      copy.exists(f.rename(_, live))
+    }
+  }
 
   def conversations: DataFrame = readOr("conversations", conversationSchema)
   def messages: DataFrame = readOr("messages", messageSchema)
   def results: DataFrame = readOr("results", resultSchema)
   def resultLinks: DataFrame = readOr("result_links", resultLinkSchema)
 
-  private def overwrite(t: String, df: DataFrame): Unit = {
-    // read-modify-overwrite needs a materialized source (can't overwrite
-    // what is being read); tiny tables here, cache + count forces it.
-    val cached = df.cache()
-    cached.count()
-    cached.write.mode(SaveMode.Overwrite).parquet(path(t))
-    cached.unpersist()
+  /**
+   * Replaces table `t` with `df` (which may read `t`): one write into a
+   * staged sibling directory, then a swap by rename. A failing write
+   * leaves the live table untouched and removes what it staged; a process
+   * dying between the two renames leaves the table missing until
+   * [[recover]] moves a complete copy back (ROADMAP open item #2 replaces
+   * this with a snapshot commit).
+   */
+  private[store] def overwrite(t: String, df: DataFrame): Unit = {
+    val live = new Path(path(t))
+    val staged = new Path(s"${path(t)}.staged")
+    val retired = new Path(s"${path(t)}.retired")
+    val f = fs(live)
+    recover(t)
+    f.delete(staged, true)
+    try df.write.parquet(staged.toString)
+    catch { case e: Throwable => f.delete(staged, true); throw e }
+    f.delete(retired, true)
+    if (f.exists(live) && !f.rename(live, retired))
+      throw new java.io.IOException(s"cannot retire $live")
+    if (!f.rename(staged, live)) throw new java.io.IOException(s"cannot publish $staged")
+    f.delete(retired, true)
   }
 
-  private def append(t: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(path(t))
+  private def append(t: String, rows: Seq[Row], schema: StructType): Unit = {
+    recover(t)
+    spark.createDataFrame(rows.asJava, schema).write.mode(SaveMode.Append).parquet(path(t))
+  }
 
   // ── S1: conversation upsert (MERGE on workflow_id) ─────────────────────
   /**
    * MERGE semantics of neo4j_memory.py:170-186: ON CREATE set all props,
-   * ON MATCH set only `status`.
+   * ON MATCH set only `status` (and write nothing when it is unchanged).
    */
   def createConversation(workflowId: String, originalQuery: String,
-                         status: String, now: Timestamp): Conversation = {
-    val existing = conversations
-    val src = spark.createDataFrame(Seq(
-      Conversation(workflowId, originalQuery, status, now, s"conv-$workflowId")))
-    val merged = existing.alias("t")
-      .join(src.alias("s"), Seq("workflow_id"), "full_outer")
-      .select(
-        col("workflow_id"),
-        coalesce(col("t.original_query"), col("s.original_query")).as("original_query"),
-        coalesce(col("s.status"), col("t.status")).as("status"), // MATCH → update status
-        coalesce(col("t.created_at"), col("s.created_at")).as("created_at"),
-        coalesce(col("t.conversation_id"), col("s.conversation_id")).as("conversation_id"))
-    overwrite("conversations", merged)
-    getConversation(workflowId).get
-  }
+                         status: String, now: Timestamp): Conversation =
+    getConversation(workflowId) match {
+      case None =>
+        val c = Conversation(workflowId, originalQuery, status, now, s"conv-$workflowId")
+        append("conversations", Seq(Row(c.workflow_id, c.original_query, c.status,
+          c.created_at, c.conversation_id)), conversationSchema)
+        c
+      case Some(c) if c.status == status => c
+      case Some(c) =>
+        updateStatus(workflowId, status)
+        c.copy(status = status)
+    }
 
   // ── S2: status update by key ───────────────────────────────────────────
   def updateStatus(workflowId: String, status: String): Unit =
@@ -92,22 +153,43 @@ class ConversationStore(spark: SparkSession, basePath: String) {
       .as[Conversation].collect().headOption
   }
 
-  /** A1 — next sequence over Message∪Result (max+1, 0 on empty group). */
-  private def nextSequence(workflowId: String): Int = {
-    val items = messages.select(col("workflow_id"), col("sequence"))
-      .unionByName(results.select(col("workflow_id"), col("sequence")))
-      .filter(col("workflow_id") === workflowId)
-    items.agg(coalesce(max(col("sequence")) + 1, lit(0))).collect()(0).getInt(0)
+  /**
+   * A1 + J3 in one collect: the next sequence over Message∪Result of
+   * `workflowId` (max+1, 0 on an empty group; taken on the driver, so no
+   * aggregate shuffle), and which of `contents` already exist as messages
+   * of `category` (the duplicate guard; `contents` empty = no guard).
+   */
+  private def scanSequence(workflowId: String, category: Option[String] = None,
+                           contents: Seq[String] = Nil): (Int, Set[String]) = {
+    val key = col("workflow_id") === workflowId
+    val noHit = lit(null).cast("string")
+    val hit =
+      if (contents.isEmpty) noHit
+      else when(col("content").isin(contents: _*) &&
+        (col("message_category") <=> lit(category.orNull).cast("string")), col("content"))
+    val rows = messages.filter(key).select(col("sequence"), hit.as("hit"))
+      .unionByName(results.filter(key).select(col("sequence"), noHit.as("hit")))
+      .collect()
+    val seqs = rows.iterator.filterNot(_.isNullAt(0)).map(_.getInt(0)).toSeq
+    val next = if (seqs.isEmpty) 0 else seqs.max + 1
+    (next, rows.iterator.flatMap(r => Option(r.getString(1))).toSet)
   }
+
+  private def appendMessages(ms: Seq[Message]): Seq[Message] = {
+    append("messages", ms.map(m => Row(m.message_id, m.workflow_id, m.message_type,
+      m.content, m.timestamp, m.sequence, m.message_category.orNull)), messageSchema)
+    ms
+  }
+
+  private def message(workflowId: String, seq: Int, messageType: String, content: String,
+                      now: Timestamp, category: Option[String]): Message =
+    Message(s"$workflowId-msg-$seq", workflowId, messageType, content, now, seq, category)
 
   // ── S4: message append with sequence (neo4j_memory.py:306-431) ─────────
   def addMessage(workflowId: String, messageType: String, content: String,
                  now: Timestamp, category: Option[String] = None): Message = {
-    val seq = nextSequence(workflowId)
-    val m = Message(s"$workflowId-msg-$seq", workflowId, messageType, content,
-      now, seq, category)
-    append("messages", spark.createDataFrame(Seq(m)))
-    m
+    val (seq, _) = scanSequence(workflowId)
+    appendMessages(Seq(message(workflowId, seq, messageType, content, now, category))).head
   }
 
   /**
@@ -144,7 +226,7 @@ class ConversationStore(spark: SparkSession, basePath: String) {
     // re-evaluating the lazy plan could re-order created_at ties in the
     // window and report message_ids that differ from the rows written
     val materialized = assigned.localCheckpoint(true)
-    append("messages", materialized)
+    materialized.write.mode(SaveMode.Append).parquet(path("messages"))
     materialized
   }
 
@@ -154,24 +236,59 @@ class ConversationStore(spark: SparkSession, basePath: String) {
    */
   def addMessageIfAbsent(workflowId: String, messageType: String, content: String,
                          now: Timestamp, category: Option[String]): Option[Message] = {
-    val dup = messages.filter(col("workflow_id") === workflowId &&
-      col("content") === content &&
-      col("message_category") <=> category.map(lit(_)).getOrElse(lit(null))).limit(1)
-    if (dup.collect().nonEmpty) None
-    else Some(addMessage(workflowId, messageType, content, now, category))
+    val (seq, dups) = scanSequence(workflowId, category, Seq(content))
+    if (dups.nonEmpty) None
+    else Some(appendMessages(Seq(message(workflowId, seq, messageType, content, now,
+      category))).head)
+  }
+
+  /**
+   * The clarification flow's opening (interactive_research_workflow.py +
+   * main.py:296-303) in one scan and one append: the human `query` as an
+   * `initial_query` message, then every AI question of `questions` not
+   * already asked (J3 guard, also against earlier questions of the same
+   * batch). Writes exactly the rows of `addMessage` followed by one
+   * `addMessageIfAbsent` per question (pinned in ConversationStoreSpec).
+   */
+  def addQueryWithQuestions(workflowId: String, query: String, questions: Seq[String],
+                            now: Timestamp): Seq[Message] = {
+    val category = Some("clarification_question")
+    val (first, asked) = scanSequence(workflowId, category, questions)
+    val fresh = questions.distinct.filterNot(asked)
+    appendMessages(
+      message(workflowId, first, "human", query, now, Some("initial_query")) +:
+        fresh.zipWithIndex.map { case (q, i) =>
+          message(workflowId, first + 1 + i, "ai", q, now, category)
+        })
   }
 
   // ── S5: result append (neo4j_memory.py:433-572) ────────────────────────
   def addResult(workflowId: String, shortSummary: String, markdownReport: String,
                 now: Timestamp, title: Option[String] = None,
-                imageFilePath: Option[String] = None): Result = {
-    val seq = nextSequence(workflowId)
+                imageFilePath: Option[String] = None): Result =
+    appendResult(workflowId, shortSummary, markdownReport, now, title, imageFilePath, None)
+
+  /** S5 + S7 in one append: the result row is written with its embedding
+    * already set, instead of `addResult` then a `setEmbedding` rewrite of
+    * the whole results table. */
+  def addIndexedResult(workflowId: String, shortSummary: String, markdownReport: String,
+                       now: Timestamp, title: Option[String], imageFilePath: Option[String],
+                       embedding: Array[Float]): Result =
+    appendResult(workflowId, shortSummary, markdownReport, now, title, imageFilePath,
+      Some(embedding))
+
+  private def appendResult(workflowId: String, shortSummary: String, markdownReport: String,
+                           now: Timestamp, title: Option[String],
+                           imageFilePath: Option[String],
+                           embedding: Option[Array[Float]]): Result = {
+    val (seq, _) = scanSequence(workflowId)
     val r = Result(s"$workflowId-result-$seq", workflowId, shortSummary,
       markdownReport, now, seq, title,
-      imageFilePath.map(p => if (p.startsWith("/")) p else s"/$p"), None)
-    append("results", spark.createDataFrame(Seq(r))
-      .withColumn("embedding", lit(null).cast("array<float>")))
-    append("result_links", spark.createDataFrame(Seq(ResultLink(workflowId, r.result_id, now))))
+      imageFilePath.map(p => if (p.startsWith("/")) p else s"/$p"), embedding)
+    append("results", Seq(Row(r.result_id, r.workflow_id, r.short_summary,
+      r.markdown_report, r.timestamp, r.sequence, r.title.orNull, r.image_file_path.orNull,
+      r.embedding.map(_.toSeq).orNull)), resultSchema)
+    append("result_links", Seq(Row(workflowId, r.result_id, now)), resultLinkSchema)
     r
   }
 
@@ -179,10 +296,10 @@ class ConversationStore(spark: SparkSession, basePath: String) {
   /** Returns true when a new link was written, false when it already existed. */
   def linkExistingResult(workflowId: String, resultId: String, now: Timestamp): Boolean = {
     val already = resultLinks.filter(col("workflow_id") === workflowId &&
-      col("result_id") === resultId).limit(1)
-    if (already.collect().nonEmpty) false
+      col("result_id") === resultId).select(col("result_id")).collect()
+    if (already.nonEmpty) false
     else {
-      append("result_links", spark.createDataFrame(Seq(ResultLink(workflowId, resultId, now))))
+      append("result_links", Seq(Row(workflowId, resultId, now)), resultLinkSchema)
       true
     }
   }
@@ -200,6 +317,13 @@ class ConversationStore(spark: SparkSession, basePath: String) {
       .orderBy(col("sequence"))
     limit.map(base.limit).getOrElse(base)
   }
+
+  /** Message count per category of `workflowId` (one filtered scan, no
+    * sort): the clarification progress that status and answers report. */
+  def messageCategories(workflowId: String): Map[String, Int] =
+    messages.filter(col("workflow_id") === workflowId).select(col("message_category"))
+      .collect().toSeq.flatMap(r => Option(r.getString(0)))
+      .groupBy(identity).map { case (c, rs) => c -> rs.size }
 
   /** W1 — NEXT-edge reconstruction via lead() (SURVEY §1.3). */
   def messagesWithNext(workflowId: String): DataFrame = {
@@ -224,6 +348,14 @@ class ConversationStore(spark: SparkSession, basePath: String) {
     graft.ops.Relational.paginateAfter(conversations,
       Seq("created_at" -> false, "workflow_id" -> false),
       Seq(lit(cursorCreatedAt), lit(cursorWorkflowId)), n)
+
+  /** D6 guard — whether `workflowId` has a result linked: one filtered
+    * scan of result_links instead of the join, sort and limit of
+    * `getResults` (a link is written after its result row, or by
+    * `linkExistingResult` for a result the cache gate read). */
+  def hasResults(workflowId: String): Boolean =
+    resultLinks.filter(col("workflow_id") === workflowId).select(col("result_id"))
+      .collect().nonEmpty
 
   /** J5 — results of a conversation through result_links (FK hash join). */
   def getResults(workflowId: String): DataFrame =

@@ -85,6 +85,18 @@ class ResearchPipelineSpec extends AnyFunSuite {
     assert(pipe.provideClarification("wf1", "late", t1).isLeft)
   }
 
+  test("D4: starting the same clarification flow twice asks no question twice") {
+    val (store, pipe, _) = fresh()
+    val qs = pipe.startWithClarifications("wf1", "tell me about rust", t0)
+    assert(pipe.startWithClarifications("wf1", "tell me about rust", t1) == qs)
+    val asked = store.messages.filter("message_category = 'clarification_question'")
+      .collect().map(r => (r.getAs[String]("content"), r.getAs[Int]("sequence")))
+    assert(asked.map(_._1).sorted.toSeq == qs.sorted, "each question stored once")
+    assert(asked.map(_._2).sorted.toSeq == Seq(1, 2, 3))
+    assert(store.messages.filter("message_category = 'initial_query'").count() == 2)
+    assert(pipe.getStatus("wf1").contains("collecting_answers"))
+  }
+
   test("D4: question-ending queries skip clarifications entirely") {
     val (_, pipe, _) = fresh()
     val qs = pipe.startWithClarifications("wf1", "what is the answer?", t0)

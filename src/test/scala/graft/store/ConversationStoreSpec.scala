@@ -3,6 +3,8 @@ package graft.store
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -170,5 +172,113 @@ class ConversationStoreSpec extends AnyFunSuite {
     val afterTie = st.listConversationsAfter(all(tieIdx)._2, "wfa", 10)
       .collect().map(_.getString(0)).toSeq
     assert(afterTie == all.drop(tieIdx + 1).map(_._1).toSeq)
+  }
+
+  test("J3 batch: addQueryWithQuestions writes the rows of addMessage + an addMessageIfAbsent loop") {
+    val asked = Seq("Q1?", "Q2?", "Q1?", "Q3?") // Q1 repeats inside the batch
+    def seeded(): ConversationStore = {
+      val st = freshStore()
+      st.addMessage("wf1", "human", "earlier", t0, Some("initial_query"))
+      st.addMessage("wf1", "ai", "Q2?", t0, Some("clarification_question")) // already asked
+      st.addMessage("wf1", "human", "Q3?", t0, Some("clarification_answer")) // other category
+      st.addMessage("wf2", "ai", "Q1?", t0, Some("clarification_question")) // other workflow
+      st
+    }
+    val loop = seeded()
+    loop.addMessage("wf1", "human", "topic", t1, Some("initial_query"))
+    asked.foreach(q => loop.addMessageIfAbsent("wf1", "ai", q, t1, Some("clarification_question")))
+    val batch = seeded()
+    val written = batch.addQueryWithQuestions("wf1", "topic", asked, t1)
+
+    def rows(st: ConversationStore) = st.messages
+      .select("message_id", "workflow_id", "message_type", "content", "timestamp", "sequence",
+        "message_category")
+      .collect().map(_.toSeq).toSet
+    assert(rows(batch) == rows(loop))
+    assert(written.map(m => (m.message_id, m.content, m.message_category)) == Seq(
+      ("wf1-msg-3", "topic", Some("initial_query")),
+      ("wf1-msg-4", "Q1?", Some("clarification_question")),
+      ("wf1-msg-5", "Q3?", Some("clarification_question"))))
+    // asking the same questions again adds only the query
+    assert(batch.addQueryWithQuestions("wf1", "topic", asked, t1).map(_.content) == Seq("topic"))
+  }
+
+  test("readOr: a missing table reads as empty, a broken one raises") {
+    assert(freshStore().conversations.count() == 0)
+    // an unknown filesystem is not a missing table: it must not read as empty
+    val unknownFs = new ConversationStore(spark, "graftnofs://nowhere/store")
+    intercept[java.io.IOException](unknownFs.getConversation("wf1"))
+    // a table directory holding a file that is not parquet
+    val dir = Files.createTempDirectory("graft-store")
+    val st = new ConversationStore(spark, dir.toString)
+    Files.createDirectories(dir.resolve("conversations"))
+    Files.write(dir.resolve("conversations").resolve("part-0.parquet"), "not parquet".getBytes)
+    intercept[Exception](st.getConversation("wf1"))
+  }
+
+  test("overwrite: a failed rewrite leaves the table intact and nothing staged") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val dir = Files.createTempDirectory("graft-store")
+    val st = new ConversationStore(spark, dir.toString)
+    st.createConversation("wf1", "q1", "pending", t0)
+    st.createConversation("wf2", "q2", "pending", t0)
+    val before = st.conversations.collect().map(_.toSeq).toSet
+    // the parquet writer's task throws on a timestamp that needs calendar
+    // rebasing when the rebase mode is EXCEPTION: a failure of the write
+    // itself, after the new rows were computed
+    val ancient = Timestamp.valueOf("1000-01-01 00:00:00")
+    val modes = Seq("spark.sql.parquet.datetimeRebaseModeInWrite",
+      "spark.sql.parquet.int96RebaseModeInWrite")
+    val saved = modes.map(k => k -> spark.conf.getOption(k))
+    modes.foreach(spark.conf.set(_, "EXCEPTION"))
+    try intercept[Exception](st.overwrite("conversations", st.conversations.withColumn(
+      "created_at", when(col("workflow_id") === "wf1", lit(ancient)).otherwise(col("created_at")))))
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(st.conversations.collect().map(_.toSeq).toSet == before)
+    val left = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(left == Set("conversations"), s"left behind: $left")
+    // a rewrite that succeeds replaces the rows
+    st.updateStatus("wf1", "completed")
+    assert(st.getConversation("wf1").map(_.status).contains("completed"))
+    assert(Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet ==
+      Set("conversations"))
+  }
+
+  test("overwrite: a swap cut between its two renames is finished, not lost") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    def seeded() = {
+      val dir = Files.createTempDirectory("graft-store")
+      val st = new ConversationStore(spark, dir.toString)
+      st.createConversation("wf1", "q1", "pending", t0)
+      st.createConversation("wf2", "q2", "pending", t0)
+      // the first rename done, the second not: live is gone, old rows retired
+      Files.move(dir.resolve("conversations"), dir.resolve("conversations.retired"))
+      (dir, st)
+    }
+    def statuses(st: ConversationStore) =
+      st.conversations.collect().map(r => r.getAs[String]("workflow_id") -> r.getAs[String]("status")).toMap
+    def names(dir: java.nio.file.Path) =
+      Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
+
+    // the new rows were staged completely: they are the table
+    val (dir, st) = seeded()
+    spark.read.parquet(dir.resolve("conversations.retired").toString)
+      .withColumn("status", when(col("workflow_id") === "wf1", lit("completed")).otherwise(col("status")))
+      .write.parquet(dir.resolve("conversations.staged").toString)
+    assert(statuses(st) == Map("wf1" -> "completed", "wf2" -> "pending"))
+    st.updateStatus("wf2", "researching")
+    assert(statuses(st) == Map("wf1" -> "completed", "wf2" -> "researching"))
+    assert(names(dir) == Set("conversations"), "a later rewrite clears the old copy")
+
+    // only a partial staged write (no _SUCCESS): the retired rows are the
+    // table, and an append adds to them instead of starting a new one
+    val (dir2, st2) = seeded()
+    Files.createDirectories(dir2.resolve("conversations.staged"))
+    Files.write(dir2.resolve("conversations.staged").resolve("part-0.parquet"), "cut".getBytes)
+    st2.createConversation("wf3", "q3", "pending", t1)
+    assert(statuses(st2) == Map("wf1" -> "pending", "wf2" -> "pending", "wf3" -> "pending"))
   }
 }
