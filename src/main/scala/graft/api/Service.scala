@@ -51,13 +51,10 @@ class Service(store: ConversationStore, pipeline: ResearchPipeline) {
       case None => Left("not found")
       case Some(c) if c.status != "completed" => Left(s"not completed (status=${c.status})")
       case Some(_) =>
-        store.getResults(workflowId).orderBy(org.apache.spark.sql.functions.desc("sequence"))
-          .limit(1).collect().headOption match {
+        store.latestResult(workflowId) match {
           case None => Left("no result persisted")
-          case Some(r) => Right(ResultResponse(workflowId,
-            r.getAs[String]("short_summary"), r.getAs[String]("markdown_report"),
-            Option(r.getAs[String]("title")), Option(r.getAs[String]("image_file_path")),
-            None))
+          case Some(r) => Right(ResultResponse(workflowId, r.short_summary,
+            r.markdown_report, r.title, r.image_file_path, None))
         }
     }
 

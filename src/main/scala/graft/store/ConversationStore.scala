@@ -2,12 +2,15 @@ package graft.store
 
 import java.sql.Timestamp
 
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
@@ -29,42 +32,103 @@ import graft.model.Schemas
  * row-level ops with partition (bucket(workflow_id)) pruning; only this
  * class changes, not callers.
  *
- * Spark jobs per verb (a job is a driver round-trip; on tiny tables it
- * costs far more than the rows it touches). Every guard is one
- * key-filtered scan, no verb re-reads a row it just wrote, and no verb
- * rewrites a table whose rows would not change:
- *  - `getConversation`: 1 (filtered scan).
- *  - `createConversation`: 1 lookup, then 1 append when new, nothing when
- *    the status is unchanged, and 1 rewrite when the status changes.
- *  - `addMessage`, `addMessageIfAbsent`: 1 scan of messages ∪ results
- *    (next sequence and duplicate guard together) + 1 append (none when
- *    the guard finds a duplicate). `addQueryWithQuestions` is the same
- *    scan and append for a whole batch of guarded questions.
- *  - `addResult`, `addIndexedResult`: 1 scan + 1 append to results + 1 to
- *    result_links. `linkExistingResult`: 1 scan + 1 append when new.
- *  - `messageCategories`, `hasResults`: 1 (filtered scan, no sort).
+ * Reads go through a per-table row cache on the driver. Every read runs
+ * `recover` and lists the table's data files; the listing (name, length,
+ * mtime of immutable parquet files) is the table's version. While it is
+ * the listing the cached rows were read at, the table is a `LocalRelation`
+ * over those rows, and the verbs' key-filtered collects fold into it
+ * without a Spark job. Any other listing reads the parquet once (one job)
+ * and caches it again. An append adds its rows to the cache when it wrote
+ * the only new file, and a rewrite sets them when the swapped-in listing
+ * is the one it staged; every other change (another instance, bulk
+ * `addMessages`, a `recover` after a cut swap) is a new listing and so a
+ * reload. Only a table whose data files total at most
+ * `spark.sql.autoBroadcastJoinThreshold` is cached; a larger one is read
+ * by the plain distributed scan on every call, which is the shape that
+ * scales.
+ *
+ * Spark jobs per verb on cached tables (a job is a driver round-trip; on
+ * tiny tables it costs far more than the rows it touches). No verb
+ * re-reads a row it just wrote or rewrites a table whose rows would not
+ * change:
+ *  - `getConversation`, `messageCategories`, `hasResults`,
+ *    `latestResult`: 0.
+ *  - `createConversation`: 1 append when new, nothing when the status is
+ *    unchanged, 1 rewrite when the status changes.
+ *  - `addMessage`, `addQueryWithQuestions`: 1 append; `addMessageIfAbsent`
+ *    the same, or 0 when the guard finds a duplicate.
+ *  - `addResult`, `addIndexedResult`: 1 append to results + 1 to
+ *    result_links. `linkExistingResult`: 1 append when new.
  *  - `updateStatus`, `setEmbedding`: 1 job, but it rewrites the WHOLE
  *    table (conversations / results) into a staged directory that then
  *    replaces the live one. These are the write amplification left; the
  *    keyed upsert that removes them is ROADMAP open item #2 (snapshot
  *    commit path).
- * Appends write one small file each. Sequence assignment is the batch
- * row_number form for bulk loads and max+1 for single appends (the
- * reference's per-write semantics, neo4j_memory.py:327-339).
+ * A cold or reloaded read adds 1 job per table it touches; an uncached
+ * table adds 1 job per key-filtered collect. Each append writes one file.
+ * Sequence assignment is the batch row_number form for bulk loads and
+ * max+1 for single appends (the reference's per-write semantics,
+ * neo4j_memory.py:327-339).
  */
 class ConversationStore(spark: SparkSession, basePath: String) {
+  import ConversationStore._
   import Schemas._
 
   private def path(t: String) = s"$basePath/$t"
 
   private def fs(p: Path): FileSystem = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The table at `t`, or an empty local frame when its path does not
-    * exist yet. Any other failure (unreadable path, unknown filesystem)
-    * propagates: a store must never read as empty because it is broken. */
+  private val cache = mutable.Map[String, Cached]()
+
+  /** The data files of the table directory `dir` (none when it is
+    * missing); `_SUCCESS` and checksum files are not data. */
+  private def dataFiles(dir: Path): Set[DataFile] =
+    try fs(dir).listStatus(dir).iterator
+      .map(s => DataFile(s.getPath.getName, s.getLen, s.getModificationTime))
+      .filterNot(f => f.name.startsWith("_") || f.name.startsWith(".")).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+
+  /** Whether a table of `files` is small enough to hold on the driver. */
+  private def cacheable(files: Set[DataFile]): Boolean =
+    files.iterator.map(_.length).sum <= Shims.broadcastThreshold(spark)
+
+  private def remember(t: String, files: Set[DataFile], rows: Seq[InternalRow]): Unit =
+    synchronized {
+      if (cacheable(files)) cache(t) = Cached(files, rows.toVector) else cache -= t
+    }
+
+  private def toInternal(schema: StructType, rows: Seq[Row]): Seq[InternalRow] = {
+    val ser = ExpressionEncoder(schema).createSerializer()
+    rows.map(r => ser(r).copy())
+  }
+
+  /**
+   * The table at `t`, or an empty frame when its path does not exist yet.
+   * A table whose data files total at most `autoBroadcastJoinThreshold`
+   * is served from its rows cached on the driver while its listing is the
+   * one they were read at (a `LocalRelation`: filters and projections fold
+   * into it, so a key-filtered collect runs no job); any other listing
+   * reads the parquet once and caches the rows again. A larger table is
+   * the plain parquet scan. Any other failure (unreadable path, unknown
+   * filesystem) propagates: a store must never read as empty because it is
+   * broken.
+   */
   private def readOr(t: String, schema: StructType): DataFrame = {
-    if (recover(t)) spark.read.schema(schema).parquet(path(t))
-    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val files = if (recover(t)) dataFiles(new Path(path(t))) else Set.empty[DataFile]
+    synchronized(cache.get(t).filter(_.files == files)) match {
+      case Some(c) => Shims.localFrame(spark, schema, c.rows)
+      case None if files.isEmpty =>
+        remember(t, files, Nil)
+        Shims.localFrame(spark, schema, Nil)
+      case None =>
+        val df = spark.read.schema(schema).parquet(path(t))
+        if (!cacheable(files)) { synchronized(cache -= t); df }
+        else {
+          val rows = toInternal(df.schema, df.collect().toSeq)
+          remember(t, files, rows)
+          Shims.localFrame(spark, schema, rows)
+        }
+    }
   }
 
   /**
@@ -99,7 +163,9 @@ class ConversationStore(spark: SparkSession, basePath: String) {
    * leaves the live table untouched and removes what it staged; a process
    * dying between the two renames leaves the table missing until
    * [[recover]] moves a complete copy back (ROADMAP open item #2 replaces
-   * this with a snapshot commit).
+   * this with a snapshot commit). When `df` is computed from cached rows
+   * it is written as one file, and its rows become the cache when the
+   * live listing after the swap is the staged one.
    */
   private[store] def overwrite(t: String, df: DataFrame): Unit = {
     val live = new Path(path(t))
@@ -108,18 +174,42 @@ class ConversationStore(spark: SparkSession, basePath: String) {
     val f = fs(live)
     recover(t)
     f.delete(staged, true)
-    try df.write.parquet(staged.toString)
+    val rows = Shims.localRows(df)
+    try rows.fold(df)(_ => df.coalesce(1)).write.parquet(staged.toString)
     catch { case e: Throwable => f.delete(staged, true); throw e }
+    val files = dataFiles(staged)
     f.delete(retired, true)
     if (f.exists(live) && !f.rename(live, retired))
       throw new java.io.IOException(s"cannot retire $live")
     if (!f.rename(staged, live)) throw new java.io.IOException(s"cannot publish $staged")
     f.delete(retired, true)
+    rows.filter(_ => dataFiles(live) == files) match {
+      case Some(r) => remember(t, files, r)
+      case None => synchronized(cache -= t)
+    }
   }
 
+  /** Appends `rows` to table `t` as one file. The cache takes the rows too
+    * when it held the table as listed before the write (a table of no data
+    * files holds no rows) and the write added exactly that one file: any
+    * other writer shows as a file more. */
   private def append(t: String, rows: Seq[Row], schema: StructType): Unit = {
     recover(t)
-    spark.createDataFrame(rows.asJava, schema).write.mode(SaveMode.Append).parquet(path(t))
+    val live = new Path(path(t))
+    val before = dataFiles(live)
+    val written = toInternal(schema, rows)
+    Shims.localFrame(spark, schema, written).coalesce(1)
+      .write.mode(SaveMode.Append).parquet(path(t))
+    val after = dataFiles(live)
+    synchronized {
+      val held =
+        if (before.isEmpty) Some(Vector.empty)
+        else cache.get(t).filter(_.files == before).map(_.rows)
+      held.filter(_ => before.subsetOf(after) && after.size == before.size + 1) match {
+        case Some(rows) => remember(t, after, rows ++ written)
+        case None => cache -= t
+      }
+    }
   }
 
   // ── S1: conversation upsert (MERGE on workflow_id) ─────────────────────
@@ -154,25 +244,25 @@ class ConversationStore(spark: SparkSession, basePath: String) {
   }
 
   /**
-   * A1 + J3 in one collect: the next sequence over Message∪Result of
-   * `workflowId` (max+1, 0 on an empty group; taken on the driver, so no
-   * aggregate shuffle), and which of `contents` already exist as messages
-   * of `category` (the duplicate guard; `contents` empty = no guard).
+   * A1 + J3 from one key-filtered collect per table (two plans that fold
+   * into cached rows, where a union would not): the next sequence over
+   * Message∪Result of `workflowId` (max+1, 0 on an empty group; taken on
+   * the driver, so no aggregate shuffle), and which of `contents` already
+   * exist as messages of `category` (the duplicate guard; `contents`
+   * empty = no guard).
    */
   private def scanSequence(workflowId: String, category: Option[String] = None,
                            contents: Seq[String] = Nil): (Int, Set[String]) = {
     val key = col("workflow_id") === workflowId
-    val noHit = lit(null).cast("string")
     val hit =
-      if (contents.isEmpty) noHit
+      if (contents.isEmpty) lit(null).cast("string")
       else when(col("content").isin(contents: _*) &&
         (col("message_category") <=> lit(category.orNull).cast("string")), col("content"))
-    val rows = messages.filter(key).select(col("sequence"), hit.as("hit"))
-      .unionByName(results.filter(key).select(col("sequence"), noHit.as("hit")))
-      .collect()
-    val seqs = rows.iterator.filterNot(_.isNullAt(0)).map(_.getInt(0)).toSeq
+    val ms = messages.filter(key).select(col("sequence"), hit).collect()
+    val rs = results.filter(key).select(col("sequence")).collect()
+    val seqs = (ms ++ rs).iterator.filterNot(_.isNullAt(0)).map(_.getInt(0)).toSeq
     val next = if (seqs.isEmpty) 0 else seqs.max + 1
-    (next, rows.iterator.flatMap(r => Option(r.getString(1))).toSet)
+    (next, ms.iterator.flatMap(r => Option(r.getString(1))).toSet)
   }
 
   private def appendMessages(ms: Seq[Message]): Seq[Message] = {
@@ -219,7 +309,8 @@ class ConversationStore(spark: SparkSession, basePath: String) {
       .withColumn("message_id",
         concat(col("workflow_id"), lit("-msg-"), col("sequence")))
       .select(col("message_id"), col("workflow_id"), col("message_type"),
-        col("content"), col("created_at"), col("sequence"), col("message_category"))
+        col("content"), col("created_at").as("timestamp"), col("sequence"),
+        col("message_category"))
     // localCheckpoint (eager): materializes ONE assignment before the append
     // (the plan reads `messages` for __base while the write lands in the
     // same directory), and the returned frame is that same materialization —
@@ -357,10 +448,31 @@ class ConversationStore(spark: SparkSession, basePath: String) {
     resultLinks.filter(col("workflow_id") === workflowId).select(col("result_id"))
       .collect().nonEmpty
 
+  /** The linked result of `workflowId` with the highest sequence (the
+    * first row of `getResults` sorted descending), from two key-filtered
+    * collects instead of a join and a sort. */
+  def latestResult(workflowId: String): Option[Result] = {
+    import spark.implicits._
+    val ids = resultLinks.filter(col("workflow_id") === workflowId)
+      .select(col("result_id")).as[String].collect().distinct
+    if (ids.isEmpty) None
+    else results.filter(col("result_id").isin(ids: _*)).as[Result].collect()
+      .maxByOption(_.sequence)
+  }
+
   /** J5 — results of a conversation through result_links (FK hash join). */
   def getResults(workflowId: String): DataFrame =
     resultLinks.filter(col("workflow_id") === workflowId)
       .select(col("result_id"), col("linked_at"))
       .join(results, "result_id")
       .orderBy(col("sequence"))
+}
+
+object ConversationStore {
+  /** One data file of a table: parquet files are never modified in
+    * place, so a table's listing of these is its version. */
+  private final case class DataFile(name: String, length: Long, mtime: Long)
+
+  /** A table's rows as of one listing of its data files. */
+  private final case class Cached(files: Set[DataFile], rows: Vector[InternalRow])
 }

@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -48,4 +51,27 @@ object Shims {
       cs.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
       schema, isStreaming = true)
   }
+
+  /** A frame over rows held on the driver: a `LocalRelation` made once,
+    * without converting the rows again. Catalyst's ConvertToLocalRelation
+    * folds filters, projections and limits into it, so collecting such a
+    * plan launches no job. Columns are nullable, as in a parquet read with
+    * a user schema. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema.asNullable), rows))
+
+  /** The rows of `df` when its optimized plan folded into a
+    * `LocalRelation` (they were computed on the driver while planning). */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes (-1:
+    * disabled): the size up to which Spark itself treats a relation as
+    * small enough to hold on the driver. */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 }

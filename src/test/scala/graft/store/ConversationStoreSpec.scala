@@ -76,7 +76,7 @@ class ConversationStoreSpec extends AnyFunSuite {
     b.addMessages(batch)
 
     def snap(st: ConversationStore) = st.messages
-      .select("message_id", "workflow_id", "message_type", "content", "sequence")
+      .select("message_id", "workflow_id", "message_type", "content", "timestamp", "sequence")
       .collect().map(_.toSeq).toSet
     assert(snap(b) == snap(a), "batch and single-append sequence assignment must agree")
     // continuation after a batch also agrees: next single append lands at max+1
@@ -201,6 +201,28 @@ class ConversationStoreSpec extends AnyFunSuite {
       ("wf1-msg-5", "Q3?", Some("clarification_question"))))
     // asking the same questions again adds only the query
     assert(batch.addQueryWithQuestions("wf1", "topic", asked, t1).map(_.content) == Seq("topic"))
+  }
+
+  test("latestResult is the first row of getResults sorted by sequence descending") {
+    import org.apache.spark.sql.functions.desc
+    val st = freshStore()
+    def old(wf: String) = st.getResults(wf).orderBy(desc("sequence")).limit(1).collect()
+      .headOption.map(r => (r.getAs[String]("result_id"), r.getAs[String]("markdown_report")))
+    def latest(wf: String) = st.latestResult(wf).map(r => (r.result_id, r.markdown_report))
+    st.createConversation("wf1", "q1", "completed", t0)
+    st.addMessage("wf1", "human", "q1", t0, Some("initial_query"))
+    // no result
+    assert(latest("wf1").isEmpty && old("wf1").isEmpty)
+    // a repeat session whose link points at another workflow's result
+    val r1 = st.addIndexedResult("wf1", "s1", "# r1", t0, None, None, Array(1f))
+    st.createConversation("wf2", "q1", "completed", t1)
+    st.linkExistingResult("wf2", r1.result_id, t1)
+    assert(latest("wf2") == Some((r1.result_id, "# r1")) && old("wf2") == latest("wf2"))
+    // two results: the later sequence wins
+    st.addMessage("wf1", "human", "more", t1, Some("clarification_answer"))
+    val r2 = st.addResult("wf1", "s2", "# r2", t1)
+    assert(r2.sequence > r1.sequence)
+    assert(latest("wf1") == Some((r2.result_id, "# r2")) && old("wf1") == latest("wf1"))
   }
 
   test("readOr: a missing table reads as empty, a broken one raises") {

@@ -1,20 +1,25 @@
 #!/usr/bin/env python3
 """Interleaved A/B pairs of perfbench runs: a base revision against a change.
 
-    python3 tools/ab_pairs.py --base <rev> --workload service --seeds 101-110
+    python3 tools/ab_pairs.py --base <rev> --workload service,ingest --seeds 101-110
 
 The base revision is exported with `git archive` into --work; the change
 is the working tree of this checkout (or --head <rev>, exported the same
 way). Each side is built once, into its own CARGO_TARGET_DIR, before any
-run. Pair i then runs `perfbench/run.py --workload W --seed s_i --seconds
-15 --trace 0` on both sides, base first on even pairs and the change
-first on odd ones, so host drift falls on both sides alike.
+run. Then, for each workload of the comma-separated --workload in turn,
+pair i runs `perfbench/run.py --workload W --seed s_i --seconds 15
+--trace 0` on both sides, base first on even pairs and the change first
+on odd ones, so host drift falls on both sides alike.
 
-For every end-to-end metric of BENCHMARK.json it prints each side's
-median and quartiles, the change's wins (pairs where it is better in the
-metric's direction) and whether the gain rule holds: at least 9 wins in
-10 (the same share for other pair counts) and a median gap larger than
-the base's interquartile range. Every run's metrics go to --out as JSON.
+For every end-to-end metric of BENCHMARK.json and every workload it
+prints each side's median and quartiles, the change's wins (pairs where
+it is better in the metric's direction) and two verdicts. The gain rule
+holds when the change wins at least 9 pairs in 10 (the same share for
+other pair counts) and its median is better than the base's by more than
+the base's interquartile range. The worse rule is the same rule the other
+way round: the change loses at least 9 pairs in 10 and its median is
+worse by more than the base's interquartile range. Every run's metrics go
+to --out as JSON.
 
 One run takes about 45 s on a 4-core host and a build about 100 s, so 10
 pairs of one workload take about 17 minutes.
@@ -89,11 +94,12 @@ def seeds_of(spec):
 
 
 def report(pairs, metrics):
-    """Per metric: both sides' quartiles, the change's wins and the rule."""
+    """Per metric: both sides' quartiles, the change's wins and losses, and
+    the gain and worse verdicts."""
     n = len(pairs)
     need = math.ceil(0.9 * n)
     print(f"{'metric':16s} {'base q1/med/q3':>28s} {'change q1/med/q3':>28s} "
-          f"{'wins':>6s}  rule")
+          f"{'wins':>6s} {'losses':>6s}  gain / worse")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         ok = [(b["metrics"][name], h["metrics"][name]) for b, h in pairs
@@ -102,12 +108,16 @@ def report(pairs, metrics):
             continue
         bs, hs = [b for b, _ in ok], [h for _, h in ok]
         wins = sum(1 for b, h in ok if (h < b if lower else h > b))
+        losses = sum(1 for b, h in ok if (h > b if lower else h < b))
         bq, hq = quartiles(bs), quartiles(hs)
+        iqr = bq[2] - bq[0]
         gap = (bq[1] - hq[1]) if lower else (hq[1] - bq[1])
-        holds = len(ok) == n and wins >= need and gap > bq[2] - bq[0]
+        gain = len(ok) == n and wins >= need and gap > iqr
+        worse = len(ok) == n and losses >= need and -gap > iqr
         print(f"{name:16s} {bq[0]:9.4g}/{bq[1]:8.4g}/{bq[2]:9.4g} "
-              f"{hq[0]:9.4g}/{hq[1]:8.4g}/{hq[2]:9.4g} {wins:3d}/{len(ok):<2d}  "
-              f"{'holds' if holds else 'no'} (gap {gap:.4g}, base IQR {bq[2] - bq[0]:.4g})")
+              f"{hq[0]:9.4g}/{hq[1]:8.4g}/{hq[2]:9.4g} {wins:3d}/{len(ok):<2d} "
+              f"{losses:3d}/{len(ok):<2d}  {'GAIN' if gain else 'no'} / "
+              f"{'WORSE' if worse else 'no'} (gap {gap:.4g}, base IQR {iqr:.4g})")
 
 
 def main():
@@ -115,7 +125,8 @@ def main():
     ap.add_argument("--base", required=True, help="git revision of the base side")
     ap.add_argument("--head", default="", help="git revision of the change "
                     "(default: this working tree)")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True,
+                    help="one workload or several, comma-separated: service,ingest,curate")
     ap.add_argument("--seeds", required=True, help="e.g. 101-110 or 3,4,5: one pair each")
     ap.add_argument("--work", default=os.path.join(ROOT, ".ab_work"),
                     help="exported trees and builds go here")
@@ -132,21 +143,26 @@ def main():
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         metrics = json.load(fh)["end_to_end"]
-    pairs = []
-    for i, seed in enumerate(seeds_of(a.seeds)):
-        order = ("base", "change") if i % 2 == 0 else ("change", "base")
-        got = {s: run(*sides[s], a.workload, seed) for s in order}
-        pairs.append((got["base"], got["change"]))
-        for s in ("base", "change"):
-            r = got[s]
-            vals = " ".join(f"{k}={v:.4g}" for k, v in r.get("metrics", {}).items())
-            print(f"pair {i} seed {seed} {s:6s} wall {r['wall_s']:.0f}s "
-                  f"{r.get('error', '')}{vals}", flush=True)
-        if a.out:
-            with open(a.out, "w") as fh:
-                json.dump({"workload": a.workload, "base": a.base, "head": a.head or "worktree",
-                           "pairs": [{"base": b, "change": h} for b, h in pairs]}, fh, indent=1)
-    report(pairs, metrics)
+    pairs = {}
+    for workload in a.workload.split(","):
+        done = pairs[workload] = []
+        for i, seed in enumerate(seeds_of(a.seeds)):
+            order = ("base", "change") if i % 2 == 0 else ("change", "base")
+            got = {s: run(*sides[s], workload, seed) for s in order}
+            done.append((got["base"], got["change"]))
+            for s in ("base", "change"):
+                r = got[s]
+                vals = " ".join(f"{k}={v:.4g}" for k, v in r.get("metrics", {}).items())
+                print(f"{workload} pair {i} seed {seed} {s:6s} wall {r['wall_s']:.0f}s "
+                      f"{r.get('error', '')}{vals}", flush=True)
+            if a.out:
+                with open(a.out, "w") as fh:
+                    json.dump({"base": a.base, "head": a.head or "worktree", "workloads": {
+                        w: [{"base": b, "change": h} for b, h in ps]
+                        for w, ps in pairs.items()}}, fh, indent=1)
+    for workload, done in pairs.items():
+        print(f"\n{workload}: {len(done)} pairs")
+        report(done, metrics)
 
 
 if __name__ == "__main__":
