@@ -110,11 +110,16 @@ object Relational {
    * plain GreaterThan, so source-filter pushdown is unchanged.
    */
   def paginateAfter(df: DataFrame, ord: Seq[(String, Boolean)],
-                    cursor: Seq[Column], n: Int): DataFrame = {
+                    cursor: Seq[Column], n: Int): DataFrame =
+    df.filter(seekAfter(ord, cursor)).orderBy(sortColumns(ord): _*).limit(n)
+
+  /** The rows strictly after `cursor` in the total order `ord`, as a filter:
+    * the seek of [[paginateAfter]]. */
+  def seekAfter(ord: Seq[(String, Boolean)], cursor: Seq[Column]): Column = {
     require(ord.nonEmpty, "paginateAfter needs at least one ordering column")
     require(ord.length == cursor.length,
       s"ordering (${ord.length}) and cursor (${cursor.length}) lengths differ")
-    val seek = ord.zip(cursor).foldRight(lit(false)) {
+    ord.zip(cursor).foldRight(lit(false)) {
       case (((c, asc), cv), rest) =>
         // "strictly after the cursor" in this column, under Spark's default
         // null placement: ASC puts nulls FIRST (after a null cursor comes
@@ -127,9 +132,12 @@ object Relational {
           else (col(c) < cv) || (cv.isNotNull && col(c).isNull)
         strict || (col(c) <=> cv && rest)
     }
-    val sortCols = ord.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
-    df.filter(seek).orderBy(sortCols: _*).limit(n)
   }
+
+  /** The sort columns of the total order `ord` ((column, ascending) pairs),
+    * with Spark's default null placement. */
+  def sortColumns(ord: Seq[(String, Boolean)]): Seq[Column] =
+    ord.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
 
   /** W5 — top-k by score: TakeOrderedAndProject, no global sort. */
   def topK(df: DataFrame, ord: Seq[Column], k: Int): DataFrame =

@@ -14,6 +14,7 @@ import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
+import graft.ops.Relational
 
 /**
  * Conversation store (SURVEY.md §2.1 S1–S7 + §2.5 W1): the relational
@@ -52,7 +53,7 @@ import graft.model.Schemas
  * re-reads a row it just wrote or rewrites a table whose rows would not
  * change:
  *  - `getConversation`, `messageCategories`, `hasResults`,
- *    `latestResult`: 0.
+ *    `latestResult`, `listConversations`, `listConversationsAfter`: 0.
  *  - `createConversation`: 1 append when new, nothing when the status is
  *    unchanged, 1 rewrite when the status changes.
  *  - `addMessage`, `addQueryWithQuestions`: 1 append; `addMessageIfAbsent`
@@ -423,22 +424,31 @@ class ConversationStore(spark: SparkSession, basePath: String) {
       .withColumn("next_id", lead(col("message_id"), 1).over(w))
   }
 
-  /** W4 — ordered desc + offset pagination (neo4j_memory.py:279-289). */
-  def listConversations(offset: Int, limit: Int): DataFrame =
-    conversations.orderBy(col("created_at").desc, col("workflow_id").desc)
-      .offset(offset).limit(limit)
+  /** W4 — ordered desc + offset pagination (neo4j_memory.py:279-289). A
+    * cached table is sorted on the driver (a sort does not fold into its
+    * `LocalRelation`), so a page costs no job. */
+  def listConversations(offset: Int, limit: Int): DataFrame = {
+    val all = conversations
+    val order = Relational.sortColumns(listOrder)
+    Shims.sortedLocal(all, order).getOrElse(all.orderBy(order: _*)).offset(offset).limit(limit)
+  }
 
   /** W4 at scale — keyset-paginated listing: the page strictly AFTER the
     * (created_at, workflow_id) cursor in the same DESC total order as
     * [[listConversations]]; pass the last row of the previous page as the
     * cursor. The boundary is a pushable predicate + top-n, so page depth
     * never costs an O(offset) skip (see
-    * [[graft.ops.Relational.paginateAfter]]). */
+    * [[graft.ops.Relational.paginateAfter]]). A cached table is sorted on
+    * the driver and the same seek and limit fold into it: no job. */
   def listConversationsAfter(cursorCreatedAt: Timestamp,
-                             cursorWorkflowId: String, n: Int): DataFrame =
-    graft.ops.Relational.paginateAfter(conversations,
-      Seq("created_at" -> false, "workflow_id" -> false),
-      Seq(lit(cursorCreatedAt), lit(cursorWorkflowId)), n)
+                             cursorWorkflowId: String, n: Int): DataFrame = {
+    val all = conversations
+    val cursor = Seq(lit(cursorCreatedAt), lit(cursorWorkflowId))
+    Shims.sortedLocal(all, Relational.sortColumns(listOrder)) match {
+      case Some(sorted) => sorted.filter(Relational.seekAfter(listOrder, cursor)).limit(n)
+      case None => Relational.paginateAfter(all, listOrder, cursor, n)
+    }
+  }
 
   /** D6 guard — whether `workflowId` has a result linked: one filtered
     * scan of result_links instead of the join, sort and limit of
@@ -469,6 +479,9 @@ class ConversationStore(spark: SparkSession, basePath: String) {
 }
 
 object ConversationStore {
+  /** The listing order: created_at desc, workflow_id desc. */
+  private val listOrder = Seq("created_at" -> false, "workflow_id" -> false)
+
   /** One data file of a table: parquet files are never modified in
     * place, so a table's listing of these is its version. */
   private final case class DataFile(name: String, length: Long, mtime: Long)

@@ -2,6 +2,8 @@ package graft.store
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.graftshim.Shims
 
 /**
  * Versioned-table layer: snapshot-on-write + time travel + snapshot expiry —
@@ -1444,15 +1446,32 @@ object Snapshots {
     * widened column reads wide across vintages) comes from the manifest's
     * recorded per-file schemas — zero footer IO; pre-upgrade manifests
     * fall back to a mergeSchema footer sweep. */
-  def read(spark: SparkSession, base: String, version: Option[Long] = None): DataFrame = {
+  def read(spark: SparkSession, base: String, version: Option[Long] = None): DataFrame =
+    readLines(spark, base, versionLines(spark, base, version))
+
+  /** The manifest lines of version `version` (the latest when None): the
+    * one `versions` glob and one manifest read a call threads through
+    * planning and reading. */
+  private def versionLines(spark: SparkSession, base: String, version: Option[Long])
+      : Seq[String] = {
     val vs = versions(spark, base)
     require(vs.nonEmpty, s"no snapshots under $base")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
-    val lines = manifestLines(spark, base, v)
+    manifestLines(spark, base, v)
+  }
+
+  /** [[read]] of the version whose manifest is `lines`. A `planOnly` frame
+    * is the same plan over the version's first data file only: it exists to
+    * resolve a predicate ([[condOf]]) and is never collected, and the
+    * optimized filter depends on the schema, fill and delete mapping, not
+    * on the file list, which would cost a file status per file. */
+  private def readLines(spark: SparkSession, base: String, lines: Seq[String],
+      planOnly: Boolean = false): DataFrame = {
     val (data, dels) = splitEntries(lines)
+    val scan = if (planOnly) data.take(1) else data
     val frame0 = spark.read.schema(unionSchemaOf(spark, base, lines, data))
-      .parquet(data.map(e => resolve(base, e.path)): _*)
+      .parquet(scan.map(e => resolve(base, e.path)): _*)
     val fill = needsDefaultFill(lines, data)
     if (dels.nonEmpty || fill) requireSuffixUnique(data, "read")
     val frame = if (!fill) frame0
@@ -1506,6 +1525,98 @@ object Snapshots {
       f => applySchemaOps(
         if (fill) fillAddDefaults(f, lines, subset) else f,
         ops).drop(VintageCol).drop(VintagePosCol))
+  }
+
+  /** Driver-side rows of small data files, for the point reads
+    * ([[scanWhere]], [[countWhere]]'s boundary scan). The key is the
+    * file's resolved path, length and modification time, and the read
+    * schema: data files are immutable (every write goes to a fresh
+    * `part-<uuid>` name), and length and mtime still catch a table dropped
+    * and re-created, or a file rewritten, at the same path. The value is
+    * the file's rows as copied `UnsafeRow`s and their summed size. One LRU
+    * over all tables: the sum of the cached row sizes stays at most the
+    * session's `autoBroadcastJoinThreshold` at insert time, the least
+    * recently read files leaving first. The row size of every file loaded
+    * is remembered (up to [[RowCache.MaxSizes]] files) also when its rows
+    * are not kept, so a file too large to serve is not loaded again. */
+  private object RowCache {
+    final case class Key(path: String, length: Long, mtime: Long,
+                         schema: org.apache.spark.sql.types.StructType)
+    final case class Rows(rows: Vector[UnsafeRow], bytes: Long)
+    val MaxSizes = 4096
+    private val files = new java.util.LinkedHashMap[Key, Rows](16, 0.75f, true)
+    private var bytes = 0L
+    private val sizes = new java.util.LinkedHashMap[Key, java.lang.Long](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, java.lang.Long]): Boolean =
+        size > MaxSizes
+    }
+
+    def get(k: Key): Option[Rows] = synchronized(Option(files.get(k)))
+
+    /** The row size of `k`'s file if it was ever loaded. */
+    def rowBytes(k: Key): Option[Long] = synchronized(Option(sizes.get(k)).map(_.longValue))
+
+    /** Records the row size of a freshly loaded file and keeps its rows
+      * when they fit under `limit`, evicting the oldest files. */
+    def put(k: Key, rows: Vector[UnsafeRow], limit: Long): Rows = synchronized {
+      val loaded = Rows(rows, rows.iterator.map(_.getSizeInBytes.toLong).sum)
+      sizes.put(k, loaded.bytes)
+      if (loaded.bytes <= limit && !files.containsKey(k)) {
+        val eldest = files.values.iterator
+        while (bytes + loaded.bytes > limit && eldest.hasNext) {
+          bytes -= eldest.next().bytes
+          eldest.remove()
+        }
+        files.put(k, loaded)
+        bytes += loaded.bytes
+      }
+      loaded
+    }
+  }
+
+  /**
+   * [[readSubset]] served from [[RowCache]]: a `LocalRelation` over the
+   * cached rows of `subset` only, under the version's union schema and
+   * with the same schema-op mapping, into which Catalyst's
+   * ConvertToLocalRelation folds the caller's filter and projections, so
+   * collecting it launches no job. Files not cached yet are read on the
+   * driver by the scan tasks' own parquet reader
+   * ([[Shims.parquetFileReader]]), which launches no job either. None —
+   * the caller runs the distributed [[readSubset]] — unless the version
+   * has no pending deletes, the subset needs no default fill, the version
+   * records every file's schema, every subset entry records its `#b=`
+   * size, and both the `#b=` sizes and the row sizes of the subset total
+   * at most `spark.sql.autoBroadcastJoinThreshold`, the bound of the cache
+   * itself, so a served subset is held whole. A file's row size is known
+   * once it has been loaded; until then its `#b=` size stands for it.
+   */
+  private def cachedSubset(spark: SparkSession, base: String,
+      lines: Seq[String], subset: Seq[ManifestEntry]): Option[DataFrame] = {
+    val limit = Shims.broadcastThreshold(spark)
+    val (_, dels) = splitEntries(lines)
+    if (subset.isEmpty || dels.nonEmpty || subset.exists(_.bytes.isEmpty) ||
+        subset.map(_.bytes.get).sum > limit || needsDefaultFill(lines, subset)) None
+    else manifestUnionSchema(lines).flatMap { schema =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = subset.map { e =>
+        val p = new Path(resolve(base, e.path))
+        val st = p.getFileSystem(conf).getFileStatus(p)
+        (RowCache.Key(st.getPath.toString, st.getLen, st.getModificationTime, schema), st, e)
+      }
+      if (files.map { case (k, _, e) => RowCache.rowBytes(k).getOrElse(e.bytes.get) }.sum > limit)
+        None
+      else {
+        lazy val load = Shims.parquetFileReader(spark, schema)
+        val rows = files.map { case (k, st, _) =>
+          RowCache.get(k).getOrElse(RowCache.put(k, load(st), limit))
+        }
+        // rows larger than their files' recorded sizes: the distributed
+        // plan, and the sizes, now known, keep the next call off the loader
+        if (rows.map(_.bytes).sum > limit) None
+        else Some(applySchemaOps(Shims.localFrame(spark, schema, rows.flatMap(_.rows)),
+          schemaOps(lines)))
+      }
+    }
   }
 
   /**
@@ -1635,14 +1746,15 @@ object Snapshots {
   def scanPlan(spark: SparkSession, base: String,
                predicate: org.apache.spark.sql.Column,
                version: Option[Long] = None)
+      : (Seq[ManifestEntry], Seq[ManifestEntry]) =
+    planLines(spark, base, versionLines(spark, base, version), predicate)
+
+  /** [[scanPlan]] of the version whose manifest is `lines`. */
+  private def planLines(spark: SparkSession, base: String, lines: Seq[String],
+      predicate: org.apache.spark.sql.Column)
       : (Seq[ManifestEntry], Seq[ManifestEntry]) = {
-    val vs = versions(spark, base)
-    require(vs.nonEmpty, s"no snapshots under $base")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in $vs")
-    val frame = read(spark, base, Some(v))
-    val cond = condOf(frame, predicate)
-    scanPlanExpr(spark, base, v, cond,
+    val frame = readLines(spark, base, lines, planOnly = true)
+    planExprLines(spark, base, lines, condOf(frame, predicate),
       c => frame.schema.find(_.name == c).map(_.dataType))
   }
 
@@ -1653,10 +1765,15 @@ object Snapshots {
   private[graft] def scanPlanExpr(spark: SparkSession, base: String, v: Long,
       cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
       dtOf: String => Option[org.apache.spark.sql.types.DataType])
+      : (Seq[ManifestEntry], Seq[ManifestEntry]) =
+    planExprLines(spark, base, manifestLines(spark, base, v), cond, dtOf)
+
+  private def planExprLines(spark: SparkSession, base: String, lines: Seq[String],
+      cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
+      dtOf: String => Option[org.apache.spark.sql.types.DataType])
       : (Seq[ManifestEntry], Seq[ManifestEntry]) = {
     // positional-delete entries are metadata, never scan candidates; the
     // read-side verbs re-apply them over whatever files survive pruning
-    val lines = manifestLines(spark, base, v)
     val (entries, _) = splitEntries(lines)
     val ops = schemaOps(lines)
     val pairs = renamePairs(ops)
@@ -1822,18 +1939,32 @@ object Snapshots {
    * pins. The residual predicate is still applied (and pushed to the
    * parquet scan) because file granularity is coarser than row
    * granularity.
+   *
+   * Small reads run no Spark job. When the version has no pending deletes,
+   * the candidates need no ADD-COLUMN default fill, and every candidate
+   * records its `#b=` size, with both the `#b=` sizes and the candidates'
+   * in-memory row sizes totalling at most
+   * `spark.sql.autoBroadcastJoinThreshold`, the result is a
+   * `LocalRelation` over the candidates' rows held on the driver (a
+   * per-file LRU over all tables, bounded by the same threshold); a warm
+   * read and the first read after a commit (which loads only the files
+   * the commit added, on the driver) both collect with 0 jobs. Any other
+   * read is the distributed parquet plan, 1 job per collect; a file whose
+   * rows turn out too large when first loaded is read once on the driver
+   * and not loaded again. One `versions` glob and one manifest read per
+   * call.
    */
   def scanWhere(spark: SparkSession, base: String,
                 predicate: org.apache.spark.sql.Column,
                 version: Option[Long] = None): DataFrame = {
-    val (candidates, _) = scanPlan(spark, base, predicate, version)
-    val vs = versions(spark, base)
-    val v = version.getOrElse(vs.last)
-    // readSubset reads with the version's UNION physical schema (a
-    // residual predicate naming a column absent from every candidate
-    // file still resolves, null-filled — the read().filter equivalence)
-    // and applies pending deletes + schema ops
-    readSubset(spark, base, manifestLines(spark, base, v), candidates)
+    val lines = versionLines(spark, base, version)
+    val (candidates, _) = planLines(spark, base, lines, predicate)
+    // both read with the version's UNION physical schema (a residual
+    // predicate naming a column absent from every candidate file still
+    // resolves, null-filled — the read().filter equivalence) and apply
+    // pending deletes + schema ops
+    cachedSubset(spark, base, lines, candidates)
+      .getOrElse(readSubset(spark, base, lines, candidates))
       .filter(predicate)
   }
 
@@ -3185,6 +3316,12 @@ object Snapshots {
    * "definitely absent", a missing/unreadable sidecar admits the file,
    * and fpp false positives die in the residual filter. Intended for
    * integral and string keys (the id-lookup case).
+   *
+   * A [[scanWhere]], so the same rule applies: with no pending deletes, no
+   * default fill, and candidates whose recorded `#b=` sizes and row sizes
+   * each total at most `spark.sql.autoBroadcastJoinThreshold`, the lookup
+   * is served from the driver-side row cache and collects with 0 jobs,
+   * also right after a commit; otherwise it is the distributed scan, 1 job.
    */
   def pointLookup(spark: SparkSession, base: String, key: String, value: Any,
                   version: Option[Long] = None): DataFrame = {
@@ -5357,15 +5494,16 @@ object Snapshots {
    * one row per committed version with file counts and byte sizes, split
    * into own (written by that version) vs inherited (shared by manifest
    * reference) — the numbers an operator reads before deciding to compact
-   * or expire. Metadata-only: manifests + file statuses, no data scan.
+   * or expire. Metadata-only: sizes come from the manifest's `#b=` fields;
+   * only an entry without one costs a file status. No data scan.
    */
   def history(spark: SparkSession, base: String): DataFrame = {
     val f = fs(spark, base)
     val rows = versions(spark, base).map { v =>
-      val entries = manifestFiles(spark, base, v)
-      val (own, inh) = entries.partition(_.startsWith(s"v=$v/"))
-      val bytes = entries.map(rel =>
-        scala.util.Try(f.getFileStatus(new Path(resolve(base, rel))).getLen).getOrElse(0L)).sum
+      val entries = manifestLines(spark, base, v).map(parseEntry).filterNot(_.isSchemaOp)
+      val (own, inh) = entries.partition(_.path.startsWith(s"v=$v/"))
+      val bytes = entries.map(e => e.bytes.getOrElse(scala.util.Try(
+        f.getFileStatus(new Path(resolve(base, e.path))).getLen).getOrElse(0L))).sum
       (v, entries.size.toLong, own.size.toLong, inh.size.toLong, bytes)
     }
     import spark.implicits._
@@ -5623,20 +5761,23 @@ object Snapshots {
    * over a 100 TB range-clustered table reads two boundary files. Falls
    * back to a full filtered count under pending deletes or when the
    * optimizer yields no Filter to analyze (predicate folded away).
+   *
+   * The boundary scan follows [[scanWhere]]'s rule: with no default fill
+   * and boundary files whose recorded `#b=` sizes and row sizes each total
+   * at most `spark.sql.autoBroadcastJoinThreshold`, it counts the driver-side
+   * cached rows and the call runs 0 jobs (also right after a commit);
+   * otherwise it is the distributed count, 1 job. The full-scan fallback is
+   * always distributed. One `versions` glob and one manifest read per call.
    */
   def countWhere(spark: SparkSession, base: String,
                  predicate: org.apache.spark.sql.Column,
                  version: Option[Long] = None): Long = {
-    val vs = versions(spark, base)
-    require(vs.nonEmpty, s"no snapshots under $base")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in $vs")
-    val lines = manifestLines(spark, base, v)
+    val lines = versionLines(spark, base, version)
     val (data, dels) = splitEntries(lines)
     val ops = schemaOps(lines)
-    def fullScan(): Long = read(spark, base, Some(v)).filter(predicate).count()
+    def fullScan(): Long = readLines(spark, base, lines).filter(predicate).count()
     if (dels.nonEmpty) return fullScan()
-    val frame = read(spark, base, Some(v))
+    val frame = readLines(spark, base, lines, planOnly = true)
     val pairs = renamePairs(ops)
     val cond = condOf(frame, predicate).getOrElse(return fullScan())
     val bounds = predicateBounds(cond, pairs)
@@ -5659,8 +5800,15 @@ object Snapshots {
     val metaPart = proven.flatMap(_.rows).sum
     val scanned =
       if (boundary.isEmpty) 0L
-      else readSubset(spark, base, lines, boundary)
-        .filter(predicate).count()
+      else cachedSubset(spark, base, lines, boundary) match {
+        // a filter folded into the cached rows is counted on the driver
+        // (an aggregate does not fold into a LocalRelation)
+        case Some(df) =>
+          val matched = df.filter(predicate)
+          Shims.localRows(matched).fold(matched.count())(_.size.toLong)
+        case None => readSubset(spark, base, lines, boundary)
+          .filter(predicate).count()
+      }
     metaPart + scanned
   }
 

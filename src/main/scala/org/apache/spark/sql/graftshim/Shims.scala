@@ -1,13 +1,17 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, InterpretedOrdering,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{FileFormat, LogicalRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -69,9 +73,48 @@ object Shims {
       case _ => None
     }
 
+  /** `df.orderBy(order: _*)` sorted on the driver when `df` folds into a
+    * `LocalRelation` (a sort does not fold): a `LocalRelation` of its rows
+    * in that order, compared by Spark's own sort comparator over the
+    * analyzed sort order, so filters and limits on top still fold and
+    * collect without a job. None when `df` does not fold. */
+  def sortedLocal(df: DataFrame, order: Seq[Column]): Option[DataFrame] =
+    localRows(df).flatMap { rows =>
+      df.orderBy(order: _*).queryExecution.analyzed match {
+        case Sort(sortOrder, _, child, _) if child.output == df.queryExecution.analyzed.output =>
+          val cmp = new InterpretedOrdering(BindReferences.bindReferences(sortOrder, child.output))
+          Some(localFrame(df.sparkSession, df.schema, rows.sorted(cmp)))
+        case _ => None
+      }
+    }
+
   /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes (-1:
     * disabled): the size up to which Spark itself treats a relation as
     * small enough to hold on the driver. */
   def broadcastThreshold(spark: SparkSession): Long =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Reads whole parquet files on the driver under `schema`, through the
+    * reader Spark's scan tasks run (`buildReaderWithPartitionValues` over
+    * one `PartitionedFile`, rows not batches), so a file reads exactly as
+    * a `spark.read.schema(schema).parquet(...)` task would read it: missing
+    * columns null, session rebase and widening rules applied. The reader is
+    * built once per call of this function; each returned row is a copied
+    * `UnsafeRow`. No job is launched. */
+  def parquetFileReader(spark: SparkSession, schema: StructType): FileStatus => Vector[UnsafeRow] = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false")
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(cs, schema,
+      new StructType(), schema, Nil, options, cs.sessionState.newHadoopConfWithOptions(options))
+    st => {
+      val toUnsafe = UnsafeProjection.create(schema)
+      val rows = read(PartitionedFile(InternalRow.empty, SparkPath.fromFileStatus(st), 0L,
+        st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
+      try rows.map(r => toUnsafe(r).copy()).toVector
+      finally rows match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
+      }
+    }
+  }
 }

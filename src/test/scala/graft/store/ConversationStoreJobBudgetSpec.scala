@@ -124,6 +124,14 @@ class ConversationStoreJobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll 
     assert(r.map(_.markdown_report) == Right("# Research: q2") && n == 0)
   }
 
+  test("listConversations and listConversationsAfter: no job on a cached table") {
+    val (_, st) = smallStore()
+    val (page, n) = jobs(st.listConversations(1, 2).collect())
+    assert(page.map(_.getString(0)).toSeq == Seq("wf2", "wf1") && n == 0)
+    val (after, m) = jobs(st.listConversationsAfter(t0, "wf3", 5).collect())
+    assert(after.map(_.getString(0)).toSeq == Seq("wf2", "wf1") && m == 0)
+  }
+
   test("an append writes one file: three guarded questions add one file to messages") {
     val (dir, st) = smallStore()
     def messageFiles = parquetFiles(dir).filter(_.contains("/messages/"))

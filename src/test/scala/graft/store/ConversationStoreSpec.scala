@@ -174,6 +174,40 @@ class ConversationStoreSpec extends AnyFunSuite {
     assert(afterTie == all.drop(tieIdx + 1).map(_._1).toSeq)
   }
 
+  test("W4: pages of a cached table, sorted on the driver, equal the sorted frames") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val st = freshStore()
+    // ties on created_at (wf2/wf7/wf9 and wf4/wf5), one null created_at
+    Seq("wf1" -> "2026-01-01", "wf2" -> "2026-01-03", "wf7" -> "2026-01-03",
+      "wf9" -> "2026-01-03", "wf4" -> "2026-01-02", "wf5" -> "2026-01-02")
+      .foreach { case (wf, d) =>
+        st.createConversation(wf, s"q-$wf", "pending", Timestamp.valueOf(s"$d 00:00:00"))
+      }
+    st.createConversation("wf0", "q-wf0", "pending", null)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    val sorted = st.conversations.orderBy(col("created_at").desc, col("workflow_id").desc)
+    for ((offset, limit) <- Seq((0, 3), (1, 2), (2, 10), (6, 1), (7, 2), (20, 5), (0, 0))) {
+      val got = st.listConversations(offset, limit)
+      assert(rows(got) == rows(sorted.offset(offset).limit(limit)), s"offset $offset limit $limit")
+      assert(got.schema == sorted.schema)
+    }
+    val all = rows(sorted)
+    assert(all.size == 7 && all.last.getString(0) == "wf0")
+    for (cur <- all; n <- Seq(0, 2, 10)) {
+      val ts = cur.getTimestamp(3)
+      val got = st.listConversationsAfter(ts, cur.getString(0), n)
+      val want = graft.ops.Relational.paginateAfter(st.conversations,
+        Seq("created_at" -> false, "workflow_id" -> false),
+        Seq(lit(ts), lit(cur.getString(0))), n)
+      assert(rows(got) == rows(want), s"after ${cur.getString(0)} n $n")
+    }
+    // a cursor on the last row: nothing after it
+    assert(rows(st.listConversationsAfter(null, "wf0", 5)).isEmpty)
+    // a cursor between rows: equal-timestamp rows with a smaller id follow it
+    assert(rows(st.listConversationsAfter(Timestamp.valueOf("2026-01-03 00:00:00"), "wf8", 10))
+      .map(_.getString(0)) == Seq("wf7", "wf2", "wf5", "wf4", "wf1", "wf0"))
+  }
+
   test("J3 batch: addQueryWithQuestions writes the rows of addMessage + an addMessageIfAbsent loop") {
     val asked = Seq("Q1?", "Q2?", "Q1?", "Q3?") // Q1 repeats inside the batch
     def seeded(): ConversationStore = {

@@ -113,6 +113,75 @@ class FileOpenAuditSpec extends AnyFunSuite {
     assert(CountingLocalFs.openedParquet.nonEmpty, "the one candidate IS read")
   }
 
+  test("a repeated scanWhere opens no parquet file; after an append only the appended one") {
+    val base = fixture()
+    val pred = col("id") >= 1150L
+    Snapshots.scanWhere(spark, base, pred).collect()
+    CountingLocalFs.reset()
+    assert(Snapshots.scanWhere(spark, base, pred).collect().length == 51)
+    assert(CountingLocalFs.openedParquet.isEmpty,
+      s"a warm scanWhere opened ${CountingLocalFs.openedParquet.mkString(", ")}")
+    val v = Snapshots.append((1201L to 1300L).map(i => (i, s"v$i")).toDF("id", "s").coalesce(1),
+      base, statsKey = Some("id"))
+    val added = Snapshots.manifestFiles(spark, base, v).filter(_.startsWith(s"v=$v/"))
+    assert(added.size == 1)
+    CountingLocalFs.reset()
+    assert(Snapshots.scanWhere(spark, base, pred).collect().length == 151)
+    assert(CountingLocalFs.openedParquet.size == 1 &&
+      CountingLocalFs.openedParquet.head.endsWith(added.head),
+      s"the first read after the append opened ${CountingLocalFs.openedParquet.mkString(", ")}")
+  }
+
+  test("candidates whose rows outgrow the size bound read distributed, loaded on the driver once") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def cached(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+    def withThreshold[T](bytes: Long)(body: => T): T = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, bytes.toString)
+      try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val base = s"cntfs:${java.nio.file.Files.createTempDirectory("graft-openaudit-wide")}/t"
+    // two files of 1000 rows, about 530 KB of rows in memory each; the
+    // repeated string dictionary-encodes, so each file is a few KB on disk
+    val pad = "x" * 500
+    Snapshots.write((1L to 1000L).map(i => (i, pad)).toDF("id", "s").coalesce(1), base,
+      statsKey = Some("id"))
+    Snapshots.append((1001L to 2000L).map(i => (i, pad)).toDF("id", "s").coalesce(1), base,
+      statsKey = Some("id"))
+    val onDisk = Snapshots.scanPlan(spark, base, col("id") > 0L)._1.map(_.bytes.get)
+    assert(onDisk.size == 2 && onDisk.sum < 200000L, onDisk.toString)
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("id").as[Long].collect().sorted.toSeq
+
+    withThreshold(300000L) {
+      // one file under the bound on disk, its rows above it: the first call
+      // loads it on the driver and finds out, the next does not load it
+      CountingLocalFs.reset()
+      val first = Snapshots.scanWhere(spark, base, col("id") === 7L)
+      assert(!cached(first) && CountingLocalFs.openedParquet.size == 1)
+      assert(ids(first) == Seq(7L))
+      CountingLocalFs.reset()
+      val again = Snapshots.scanWhere(spark, base, col("id") === 8L)
+      assert(!cached(again) && CountingLocalFs.openedParquet.isEmpty)
+      assert(ids(again) == Seq(8L))
+      assert(Snapshots.countWhere(spark, base, col("id") <= 500L) == 500L)
+    }
+    withThreshold(800000L) {
+      // one file fits: served from the cache
+      val one = Snapshots.scanWhere(spark, base, col("id") <= 10L)
+      assert(cached(one) && ids(one) == (1L to 10L))
+      // each file fits, their rows together do not: the distributed plan,
+      // and a repeat loads nothing on the driver
+      val both = Snapshots.scanWhere(spark, base, col("id") % 500L === 0L)
+      assert(!cached(both) && ids(both) == Seq(500L, 1000L, 1500L, 2000L))
+      CountingLocalFs.reset()
+      val bothAgain = Snapshots.scanWhere(spark, base, col("id") % 500L === 0L)
+      assert(!cached(bothAgain) && CountingLocalFs.openedParquet.isEmpty)
+      assert(ids(bothAgain) == Seq(500L, 1000L, 1500L, 2000L))
+    }
+  }
+
   test("countWhere opens only boundary files; proven files stay closed") {
     val base = fixture()
     CountingLocalFs.reset()

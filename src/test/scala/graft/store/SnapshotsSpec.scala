@@ -26,6 +26,16 @@ class SnapshotsSpec extends AnyFunSuite {
     recs.get()
   }
 
+  /** Runs `body` with every point read on its distributed plan (the
+    * driver-side row cache serves no file above 1 byte), where the
+    * boundary scans' records show in task metrics. */
+  private def distributed[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("write → time travel → expire round trip") {
     val base = java.nio.file.Files.createTempDirectory("graft-snap").toString + "/t"
 
@@ -1009,6 +1019,22 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(h(1) == ((2L, 3L, 1L, 2L)), h.mkString(","))
     val bytes = Snapshots.history(spark, base).select("total_bytes").as[Long].collect()
     assert(bytes.forall(_ > 0L))
+    // sizes come from the manifest's #b= fields and equal the files' lengths
+    def length(rel: String) = new java.io.File(s"$base/$rel").length()
+    val v2Files = Snapshots.manifestFiles(spark, base, 2L)
+    assert(bytes.toSeq.sorted.last == v2Files.map(length).sum)
+    // an entry without #b= falls back to its file status, same total
+    val mf = new java.io.File(s"$base/v=2/_manifest")
+    val lines = scala.io.Source.fromFile(mf).getLines().toVector
+    assert(lines.count(_.contains("\t#b=")) == 3, lines.mkString("\n"))
+    val i = lines.indexWhere(_.contains("\t#b="))
+    java.nio.file.Files.writeString(mf.toPath,
+      lines.updated(i, lines(i).replaceAll("\\t#b=\\d+", "")).mkString("\n") + "\n")
+    new java.io.File(s"$base/v=2/._manifest.crc").delete()
+    assert(Snapshots.manifestLines(spark, base, 2L).count(_.contains("\t#b=")) == 2)
+    val h2 = Snapshots.history(spark, base).select("version", "total_bytes")
+      .as[(Long, Long)].collect().toMap
+    assert(h2(2L) == v2Files.map(length).sum)
   }
 
   test("append: a column added later is null-filled on inherited files") {
@@ -1378,15 +1404,21 @@ class SnapshotsSpec extends AnyFunSuite {
     def exact(pred: org.apache.spark.sql.Column): Long =
       Snapshots.read(spark, base).filter(pred).count()
     // fully-covered + pruned: zero data records read
-    val r1 = recordsReadDuring {
+    assert(Snapshots.countWhere(spark, base, col("id") <= 200L) == 200L)
+    val r1 = recordsReadDuring { distributed {
       assert(Snapshots.countWhere(spark, base, col("id") <= 200L) == 200L)
-    }
+    } }
     assert(r1 == 0L, s"two proven files + one pruned must read 0, read $r1")
     // a range that CUTS one file: only that file is scanned
-    val r2 = recordsReadDuring {
+    val r2 = recordsReadDuring { distributed {
+      assert(Snapshots.countWhere(spark, base, col("id") <= 150L) == 150L)
+    } }
+    assert(r2 > 0L && r2 <= 110L, s"only the boundary file should be read, read $r2")
+    // a small boundary file is counted from its rows held on the driver
+    val r2c = recordsReadDuring {
       assert(Snapshots.countWhere(spark, base, col("id") <= 150L) == 150L)
     }
-    assert(r2 > 0L && r2 <= 110L, s"only the boundary file should be read, read $r2")
+    assert(r2c == 0L, s"the cached boundary scan ran tasks reading $r2c records")
     // strict < at a file edge, equality, conjunction, cross-file range
     for (pred <- Seq(col("id") < 101L, col("id") === 100L,
         col("id") > 100L && col("id") <= 201L, col("id") >= 301L,
@@ -1405,9 +1437,10 @@ class SnapshotsSpec extends AnyFunSuite {
     // a second file WITHOUT nulls still proves from metadata
     Snapshots.append((11L to 20L).map(i => (i, s"v$i")).toDF("id", "s")
       .coalesce(1), base, statsKey = Some("id"))
-    val recs = recordsReadDuring {
+    assert(Snapshots.countWhere(spark, base, col("id") >= 11L) == 10L)
+    val recs = recordsReadDuring { distributed {
       assert(Snapshots.countWhere(spark, base, col("id") >= 11L) == 10L)
-    }
+    } }
     assert(recs == 0L, s"the null-free file proves from metadata, read $recs")
     // pending deletes: falls back to the exact filtered count
     Snapshots.deleteWhereMoR(spark, base, col("id") === 15L)
@@ -1472,15 +1505,17 @@ class SnapshotsSpec extends AnyFunSuite {
     def exact(p: org.apache.spark.sql.Column): Long =
       Snapshots.read(spark, base).filter(p).count()
     // fully-covered + pruned on score: zero data records read
-    val r1 = recordsReadDuring {
+    assert(Snapshots.countWhere(spark, base, col("score") <= 2000.0) == 200L)
+    val r1 = recordsReadDuring { distributed {
       assert(Snapshots.countWhere(spark, base, col("score") <= 2000.0) == 200L)
-    }
+    } }
     assert(r1 == 0L, s"sidecar bounds must prove/prune score ranges, read $r1")
     // boundary range on score: one file scanned
-    val r2 = recordsReadDuring {
+    val r2 = recordsReadDuring { distributed {
       assert(Snapshots.countWhere(spark, base, col("score") <= 1500.0) == 150L)
-    }
+    } }
     assert(r2 > 0L && r2 <= 110L, s"only the boundary file, read $r2")
+    assert(Snapshots.countWhere(spark, base, col("score") <= 1500.0) == 150L)
     // string column bounds work through the same sidecar
     assert(Snapshots.countWhere(spark, base, col("s") === "v42") ==
       exact(col("s") === "v42"))

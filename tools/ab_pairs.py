@@ -18,8 +18,11 @@ holds when the change wins at least 9 pairs in 10 (the same share for
 other pair counts) and its median is better than the base's by more than
 the base's interquartile range. The worse rule is the same rule the other
 way round: the change loses at least 9 pairs in 10 and its median is
-worse by more than the base's interquartile range. Every run's metrics go
-to --out as JSON.
+worse by more than the base's interquartile range. Next to them it prints
+the reject rule: the change/base ratio of the medians and the metric's
+`bound` from BENCHMARK.json, `beyond` when the change's median is worse
+than the base's by more than that fraction, else `within`. Every run's
+metrics go to --out as JSON.
 
 One run takes about 45 s on a 4-core host and a build about 100 s, so 10
 pairs of one workload take about 17 minutes.
@@ -99,7 +102,7 @@ def report(pairs, metrics):
     n = len(pairs)
     need = math.ceil(0.9 * n)
     print(f"{'metric':16s} {'base q1/med/q3':>28s} {'change q1/med/q3':>28s} "
-          f"{'wins':>6s} {'losses':>6s}  gain / worse")
+          f"{'wins':>6s} {'losses':>6s}  {'ratio':>6s} {'bound':>5s}         gain / worse")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         ok = [(b["metrics"][name], h["metrics"][name]) for b, h in pairs
@@ -114,9 +117,17 @@ def report(pairs, metrics):
         gap = (bq[1] - hq[1]) if lower else (hq[1] - bq[1])
         gain = len(ok) == n and wins >= need and gap > iqr
         worse = len(ok) == n and losses >= need and -gap > iqr
+        # the reject rule: the change's median worse than the base's by
+        # more than the metric's bound, as a fraction of the base median
+        ratio = hq[1] / bq[1] if bq[1] else float("nan")
+        worse_frac = -gap / abs(bq[1]) if bq[1] else float("nan")
+        bound = m["bound"]
+        # (a nan ratio, from a zero base median, counts as beyond)
+        verdict = "within" if worse_frac <= bound else "beyond"
         print(f"{name:16s} {bq[0]:9.4g}/{bq[1]:8.4g}/{bq[2]:9.4g} "
               f"{hq[0]:9.4g}/{hq[1]:8.4g}/{hq[2]:9.4g} {wins:3d}/{len(ok):<2d} "
-              f"{losses:3d}/{len(ok):<2d}  {'GAIN' if gain else 'no'} / "
+              f"{losses:3d}/{len(ok):<2d}  {ratio:6.3f} {bound:5.3g} {verdict:6s}  "
+              f"{'GAIN' if gain else 'no'} / "
               f"{'WORSE' if worse else 'no'} (gap {gap:.4g}, base IQR {iqr:.4g})")
 
 
